@@ -16,6 +16,17 @@ logical plan — Catalyst sees scan->project->dedup->anti-join->enrich
 and optimizes it end-to-end; only the gate decision and control-table
 bookkeeping are driver-side actions. The streaming entry point
 (streaming/trigger.py) calls exactly this function from foreachBatch.
+
+Each driver-side decision is one Spark action, and no count runs on
+its own: the gate is one lookup; the next control Id one top-1; the
+duplicate check is one aggregate that also yields the incoming count;
+the MERGE stages its batch in one write that also yields the row count
+(an Observation), the touched buckets and the buckets whose keys
+already exist; every parquet read passes its known schema, so no
+footer-inference job runs. An insert-only refresh on a bucketed target
+fires 11 jobs, a gated duplicate one. Insert-only buckets are appended
+to, not rewritten (``sinks.upsert_parquet`` has the append/rewrite rule
+and the file bound).
 """
 
 from __future__ import annotations
@@ -23,13 +34,13 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.scalar import composite_key
 from .operators.enrich import DeterministicMockClient, enrich_dataframe
 from .plans.reference_ops import read_zip_csv
-from .schemas import STATUS_COMPLETE
+from .schemas import STATUS_COMPLETE, ZIP_DETAILS_SCHEMA
 from .sources import sinks
 from .sources.batch import file_checksum
 
@@ -90,7 +101,7 @@ def evaluate_run_gate(
             )
         )
     )
-    return blocking.limit(1).count() == 0
+    return not blocking.take(1)
 
 
 def valid_processed_keys(
@@ -103,7 +114,7 @@ def valid_processed_keys(
         return spark.createDataFrame([], "CompositeKey string")
     cutoff = now - timedelta(days=ttl_days)
     return (
-        sinks.read_merge_target(spark, target_path)
+        sinks.read_merge_target(spark, target_path, ZIP_DETAILS_SCHEMA)
         .filter(
             F.col("ZipCode").isNotNull()
             & (F.col("ZipCode") != "")
@@ -122,36 +133,43 @@ class DuplicateKeyError(ValueError):
     fail-fast ToDictionary semantics (ServiceBusWorker.cs:115)."""
 
 
-def dedup_incoming(df: DataFrame, on_duplicate: str = "error") -> DataFrame:
-    """J3 with explicit duplicate policy (SURVEY.md §7.4.2).
+def dedup_incoming(df: DataFrame, on_duplicate: str = "error") -> tuple[DataFrame, int]:
+    """J3 with explicit duplicate policy (SURVEY.md §7.4.2). Returns the
+    deduplicated rows and their count.
 
     'error'  -> reference-exact: any (ZipCode, StateCode) collision
                 aborts the run.
     'first'  -> scalable: keep the deterministically-first row per key
                 (smallest (County, City)).
+
+    One aggregate over the keys answers both questions, so the input
+    is scanned once: the number of distinct keys (the row count once
+    duplicates are gone) and the smallest duplicated key, if any.
     """
+    if on_duplicate not in ("error", "first"):
+        raise ValueError(f"on_duplicate must be 'error' or 'first', got {on_duplicate!r}")
+    stats = (
+        df.groupBy("ZipCode", "StateCode")
+        .count()
+        .agg(
+            F.count(F.lit(1)).alias("keys"),
+            F.min(
+                F.when(F.col("count") > 1, F.concat_ws("_", "ZipCode", "StateCode"))
+            ).alias("dup"),
+        )
+        .first()
+    )
     if on_duplicate == "error":
-        dup = (
-            df.groupBy("ZipCode", "StateCode")
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            r = dup[0]
-            raise DuplicateKeyError(
-                f"duplicate composite key {r['ZipCode']}_{r['StateCode']} in input"
-            )
-        return df
-    if on_duplicate == "first":
-        w = Window.partitionBy("ZipCode", "StateCode").orderBy("County", "City")
-        return (
-            df.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .drop("__rk")
-        )
-    raise ValueError(f"on_duplicate must be 'error' or 'first', got {on_duplicate!r}")
+        if stats["dup"] is not None:
+            raise DuplicateKeyError(f"duplicate composite key {stats['dup']} in input")
+        return df, stats["keys"]
+    w = Window.partitionBy("ZipCode", "StateCode").orderBy("County", "City")
+    deduped = (
+        df.withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") == 1)
+        .drop("__rk")
+    )
+    return deduped, stats["keys"]
 
 
 def run_etl(
@@ -192,8 +210,7 @@ def run_etl(
         incoming = read_zip_csv(spark, csv_path).withColumn(
             "CompositeKey", composite_key("ZipCode", "StateCode")
         )
-        incoming = dedup_incoming(incoming, on_duplicate)
-        rows_incoming = incoming.count()
+        incoming, rows_incoming = dedup_incoming(incoming, on_duplicate)
         if rows_incoming == 0:
             sinks.control_finalize(spark, control_path, run_id, True, now)
             return RunResult(True, "empty input", run_id, 0, 0, 0)
@@ -204,19 +221,23 @@ def run_etl(
         processed = valid_processed_keys(spark, target_path, now, ttl_days)
         todo = incoming.join(processed, "CompositeKey", "left_anti")
 
-        # Step 4 — enrichment (T1-T4) + audit columns (P4). Persisted:
-        # every downstream action (quarantine write, count, MERGE
-        # write) reads the one cached enrichment pass — without it
-        # each action re-executes the mapInPandas stage, multiplying
-        # every external HTTP call with a real client, and the counted
-        # rows could diverge from the written rows if responses vary
-        # between executions.
+        # Step 4 — enrichment (T1-T4) + audit columns (P4). The MERGE
+        # computes its batch once (upsert_parquet stages it in one
+        # write), so without a quarantine the enrichment runs once and
+        # is not cached (a cache would cost its own job). A quarantine
+        # write is a second action over it, so then it is persisted:
+        # without the cache each action would re-execute the
+        # mapInPandas stage, multiplying every external HTTP call with
+        # a real client, and the quarantined rows could diverge from
+        # the merged rows if responses vary between executions.
         enriched = enrich_dataframe(
             todo,
             client_factory,
             max_concurrency=max_concurrency,
             with_error_column=quarantine_path is not None,
-        ).persist()
+        )
+        if quarantine_path is not None:
+            enriched = enriched.persist()
         try:
             if quarantine_path is not None:
                 from .operators.enrich import split_quarantine
@@ -243,13 +264,17 @@ def run_etl(
                 ts.alias("LastModifiedDateUtc"),
                 F.lit(run_id).cast("int").alias("ImportId"),
             )
-            rows_to_process = updates.count()
 
             # Step 5 — keyed MERGE upsert (S5); CreationDateUtc preserved
-            # for existing keys (SURVEY.md §7.4.3).
-            sinks.upsert_parquet(spark, updates, target_path)
+            # for existing keys (SURVEY.md §7.4.3). The MERGE's one write
+            # of the batch counts it into the Observation: no count job.
+            # (Read there rather than from the return value, which a
+            # wrapper around the sink need not pass on.)
+            counted = Observation()
+            sinks.upsert_parquet(spark, updates, target_path, observation=counted)
+            rows_to_process = counted.get["rows"]
         finally:
-            enriched.unpersist()
+            enriched.unpersist()  # a no-op when it was not persisted
         sinks.control_finalize(spark, control_path, run_id, True, now)
         return RunResult(
             True, "complete", run_id, rows_incoming, rows_to_process, rows_to_process

@@ -7,9 +7,12 @@ projections while pushing filters through RepartitionByExpression, so
 a marker inside a Filter can mean an expensive chain silently runs
 twice, once on the one-task scan below the spread Exchange.
 
-Prints one JSON object {key: {marker: n_conditions}} for adjudication;
-the adjudicated allowlist lives in tests/test_physical_plans.py's
-parametrized audit test.
+Prints one JSON object {key: {marker: n_conditions}} for adjudication.
+There is no registry-wide allowlist test; the adjudicated keys are
+pinned one by one in tests/test_physical_plans.py by three per-key
+Condition-line tests: test_text_repetition_no_expensive_scan_side_filter,
+test_emb_dedup_cosine_no_norm_fold_in_filters and
+test_sim_search_lsh_no_signing_fold_in_filters.
 
 Usage: python scripts/filteraudit.py [out_json]
 """

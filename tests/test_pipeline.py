@@ -6,6 +6,7 @@ commented out (exclusion on re-run, DataflowProcessorTests.cs:225-239).
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta
 
 import pytest
@@ -140,10 +141,19 @@ def test_geocode_failure_nulls_all_enrichment(spark, paths):
     assert row["Elevation"] is None and row["Timezone"] is None
 
 
+# The (zipcode, state_abbr) pairs that occur twice in zip_codes_with_dups.csv.
+FIXTURE_DUP_KEYS = (
+    "36838_AL", "75503_AZ", "94217_AZ", "10740_GA",
+    "73207_CA", "29221_CO", "53160_TX", "49099_AL",
+)
+
+
 def test_duplicate_key_error_mode(spark, paths):
     dup_csv = f"{FIXTURES_DIR}/zip_codes_with_dups.csv"
-    with pytest.raises(DuplicateKeyError):
+    with pytest.raises(DuplicateKeyError) as err:
         run_etl(spark, dup_csv, paths["target"], paths["control"], now=NOW)
+    # The message names a real duplicate, read from the aggregate row.
+    assert any(k in str(err.value) for k in FIXTURE_DUP_KEYS), str(err.value)
     # C2: the run was marked Error in the control table.
     control = spark.read.parquet(paths["control"])
     assert control.filter(F.col("Status") == "Error").count() == 1
@@ -253,6 +263,126 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert got.filter("CompositeKey = 'k7'").collect()[0]["v"] == 10_000
     assert got.count() == 200
     assert "__bucket" not in got.columns
+
+
+def _keyed(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.concat(F.lit("k"), F.col("id")).alias("CompositeKey"),
+        F.col("id").alias("v"),
+        F.lit(NOW).alias("CreationDateUtc"),
+    )
+
+
+def test_upsert_insert_only_batch_appends(spark, tmp_path):
+    """A batch whose keys are all new is appended: every file already in
+    the target stays byte-identical, and only new files appear."""
+    from net7_etl_bus_spark.sources import sinks
+
+    path = str(tmp_path / "target.parquet")
+    assert sinks.upsert_parquet(spark, _keyed(spark, 0, 200), path) == 200
+    before = _bucket_file_digests(path)
+
+    assert sinks.upsert_parquet(spark, _keyed(spark, 200, 240), path) == 40
+    after = _bucket_file_digests(path)
+    for sub, files in before.items():
+        for name, digest in files.items():
+            assert after[sub][name] == digest  # old files untouched
+    assert sum(map(len, after.values())) > sum(map(len, before.values()))
+
+    got = sinks.read_merge_target(spark, path)
+    assert got.count() == 240
+    assert got.filter("CompositeKey = 'k230'").collect()[0]["v"] == 230
+    assert sorted(os.listdir(tmp_path)) == ["target.parquet"]  # staging removed
+
+
+def test_upsert_zero_row_batch_writes_nothing(spark, tmp_path):
+    from net7_etl_bus_spark.sources import sinks
+
+    path = str(tmp_path / "target.parquet")
+    sinks.upsert_parquet(spark, _keyed(spark, 0, 200), path)
+    before = _bucket_file_digests(path)
+    assert sinks.upsert_parquet(spark, _keyed(spark, 0, 200).limit(0), path) == 0
+    assert _bucket_file_digests(path) == before
+    assert sorted(os.listdir(tmp_path)) == ["target.parquet"]
+
+
+def test_upsert_rejects_batch_with_other_columns(spark, tmp_path):
+    """A bucketed target is read with the batch's schema, so a batch
+    whose columns differ must fail before anything is written."""
+    from net7_etl_bus_spark.sources import sinks
+
+    path = str(tmp_path / "target.parquet")
+    sinks.upsert_parquet(spark, _keyed(spark, 0, 200), path)
+    before = _bucket_file_digests(path)
+    with pytest.raises(ValueError, match="columns"):
+        sinks.upsert_parquet(spark, _keyed(spark, 0, 10).drop("v"), path)
+    assert _bucket_file_digests(path) == before
+
+
+def test_upsert_bucket_at_file_bound_is_rewritten(spark, tmp_path, monkeypatch):
+    """Appends stop at MAX_BUCKET_FILES: the next batch touching a full
+    bucket rewrites it back to one write's files (its old rows in one,
+    the batch's in the other), keeping every row; no bucket ever holds
+    more than the bound."""
+    from net7_etl_bus_spark.sources import sinks
+
+    monkeypatch.setattr(sinks, "MAX_BUCKET_FILES", 3)
+    path = str(tmp_path / "target.parquet")
+    rewritten = 0
+    for lo in range(0, 500, 100):  # a create, then insert-only batches
+        before = _bucket_file_digests(path)
+        sinks.upsert_parquet(spark, _keyed(spark, lo, lo + 100), path)
+        after = _bucket_file_digests(path)
+        for sub, files in after.items():
+            assert len(files) <= 3
+            if len(before.get(sub, {})) == 3 and files != before[sub]:
+                assert len(files) == 2  # rewritten, not appended to
+                assert not set(files) & set(before[sub])
+                rewritten += 1
+    assert rewritten > 0  # the bound was reached
+    got = sinks.read_merge_target(spark, path)
+    assert got.count() == 500
+    assert got.filter(F.col("CompositeKey") == F.concat(F.lit("k"), F.col("v"))).count() == 500
+
+
+def _jobs_in(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs it fired."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_job_budget(spark, paths, tmp_path):
+    """Each decision in a run costs one Spark job: the gate, the next
+    control Id, the duplicate check with the incoming count, the staged
+    MERGE write with its row count, the control writes; no parquet
+    read infers its schema. An insert-only refresh on a bucketed target
+    stays within 11 jobs, and a gated duplicate within one (the gate's
+    lookup)."""
+    run_etl(spark, ZIP_CSV_PATH, paths["target"], paths["control"], now=NOW)
+    drop = tmp_path / "drop.csv"
+    new_rows = "02,Alaska,AK,99990,Polk,Easton\n02,Alaska,AK,99991,Clay,Salem\n"
+    drop.write_text(open(ZIP_CSV_PATH).read() + new_rows)
+    later = NOW + timedelta(hours=1)
+
+    def run():
+        return run_etl(spark, str(drop), paths["target"], paths["control"], now=later)
+
+    res, jobs = _jobs_in(spark, run)
+    assert res.reason == "complete" and res.rows_to_process == 2
+    assert jobs <= 11, jobs
+    res, jobs = _jobs_in(spark, run)
+    assert not res.should_run
+    assert jobs <= 1, jobs
 
 
 def test_quarantine_path_routes_failed_rows(spark, paths, tmp_path):
